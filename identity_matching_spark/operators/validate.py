@@ -75,11 +75,16 @@ def validation_gate(records: DataFrame, config) -> DataFrame:
         return records
     if level not in TIER_RANK:
         raise ValueError(f"unknown validation_level {level!r}; use one of {VALIDATION_LEVELS}")
-    need = TIER_RANK[level]
-    rank = (
-        F.when(tier_expr() == "L1", 3)
-        .when(tier_expr() == "L0", 2)
-        .when(tier_expr() == "BASE", 1)
-        .otherwise(0)
-    )
-    return records.filter(rank >= F.lit(need))
+    # rank >= need, spelled out per level so that the completeness weight
+    # occurs once: the filter is pushed into the scan below normalize's
+    # sha projections, and every occurrence of the weight re-inlines them
+    # into one generated method (past 64 KB, it runs interpreted). Equal
+    # to ranking tier_expr() (pytested in test_validate_rank.py).
+    w = completeness_weight_expr()
+    keep = {
+        "INVALID": F.lit(True),
+        "BASE": (w >= 9) | base_valid_expr(),
+        "L0": w >= 9,
+        "L1": w >= 10,
+    }[level]
+    return records.filter(keep)

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,44 +81,72 @@ def _t(label: str, t0: float) -> None:
         print(f"[pipeline] {label}: {time.time() - t0:.1f}s", flush=True)
 
 
-def run_pipeline(files: DataFrame, config: MatchConfig | None = None) -> PipelineResult:
-    from pyspark import StorageLevel
+@contextmanager
+def _gated_records(files: DataFrame, config: MatchConfig, reread: bool):
+    """Normalize + validation gate, persisted for the duration of the block
+    when ``reread`` says more than one pass reads it.
 
+    The passes that build the records stage read this relation: the two
+    dense-id passes, the two distinct-name passes of ``enrich_phonetic``
+    and the pass that writes or caches the stage. Without the persist each
+    of them re-runs the sha-heavy normalize projection from the input scan.
+    The block must materialize the records stage before it exits; the
+    persist is released on exit, also when the block raises.
+    """
+    gated = validation_gate(normalize_files(files), config)
+    if reread:
+        gated = gated.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield gated
+    finally:
+        if reread:
+            gated.unpersist()
+
+
+def _with_phonetic(records: DataFrame, config: MatchConfig) -> DataFrame:
+    if not config.enable_fuzzy:
+        return records
+    from identity_matching_spark.operators.compare import enrich_phonetic
+
+    return enrich_phonetic(records)
+
+
+def run_pipeline(files: DataFrame, config: MatchConfig | None = None) -> PipelineResult:
     config = config or MatchConfig()
     # records feeds blocking, both compare sides, and the singleton union —
-    # persist so the normalize projection (sha256-heavy) and the phonetic
-    # pandas UDFs run once, linearly, before any pair fan-out.
-    records = validation_gate(normalize_files(files), config)
+    # persist it so that it is computed once before any pair fan-out. The
+    # normalize projection (sha256-heavy) under it runs once as well: every
+    # pass that builds records reads the persisted gated relation, which is
+    # released once the records barrier has filled the records cache.
     dense_slim_cache = None
-    if config.dense_ids:
-        from identity_matching_spark.operators.normalize import with_dense_ids
+    reread = config.dense_ids or config.enable_fuzzy
+    with _gated_records(files, config, reread) as records:
+        if config.dense_ids:
+            from identity_matching_spark.operators.normalize import with_dense_ids
 
-        # Dense-id interning (two slim passes + broadcast join-back): the
-        # scoring attach then probes a direct-address long map per pair —
-        # the measured kernel fast path — instead of a sparse hash walk.
+            # Dense-id interning (two slim passes + broadcast join-back): the
+            # scoring attach then probes a direct-address long map per pair —
+            # the measured kernel fast path — instead of a sparse hash walk.
+            _t0 = time.time()
+            records = with_dense_ids(records, prefix_nibbles=config.dense_id_nibbles)
+            dense_slim_cache = getattr(records, "_dense_slim_cache", None)
+            _t("dense_ids_eager", _t0)
+        records = _with_phonetic(records, config).persist(StorageLevel.MEMORY_AND_DISK)
+        # EAGER materialization barrier. Each persisted stage is counted
+        # before the next stage's plan executes: AQE submits every leaf
+        # shuffle-map stage of a query CONCURRENTLY, so a chained lazy flow
+        # has 8-16 stages all scanning a cold cache at t0 and each
+        # recomputing the expensive upstream (normalize+phonetic here,
+        # minhash-keys in blocking) before any cache partition is
+        # registered — measured ~1000 wasted task-seconds at sf0.1
+        # (event-log: sixteen concurrent 17.5 s 'count' stages). One
+        # barrier per stage = each relation computed exactly once; the
+        # barrier itself is a cache-populating pass the downstream
+        # consumers need anyway. This is also the production shape at
+        # 100 TB: you materialize the records table before a pair fan-out.
         _t0 = time.time()
-        records = with_dense_ids(records, prefix_nibbles=config.dense_id_nibbles)
-        dense_slim_cache = getattr(records, "_dense_slim_cache", None)
-        _t("dense_ids_eager", _t0)
-    if config.enable_fuzzy:
-        from identity_matching_spark.operators.compare import enrich_phonetic
-
-        records = enrich_phonetic(records)
-    records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    # EAGER materialization barrier. Each persisted stage is counted before
-    # the next stage's plan executes: AQE submits every leaf shuffle-map
-    # stage of a query CONCURRENTLY, so a chained lazy flow has 8-16
-    # stages all scanning a cold cache at t0 and each recomputing the
-    # expensive upstream (normalize+phonetic here, minhash-keys in
-    # blocking) before any cache partition is registered — measured ~1000
-    # wasted task-seconds at sf0.1 (event-log: sixteen concurrent 17.5 s
-    # 'count' stages). One barrier per stage = each relation computed
-    # exactly once; the barrier itself is a cache-populating pass the
-    # downstream consumers need anyway. This is also the production shape
-    # at 100 TB: you materialize the records table before a pair fan-out.
-    _t0 = time.time()
-    n_records = records.count()
-    _t("records_barrier", _t0)
+        n_records = records.count()
+        _t("records_barrier", _t0)
     _t0 = time.time()
     blocking: BlockingResult = candidate_pairs(records, config, n_records=n_records)
     _t("blocking_call", _t0)
@@ -270,15 +300,11 @@ def run_checkpointed(
         )
         out[name] = store.read(name)
 
-    def build_records():
-        records = validation_gate(normalize_files(files), config)
-        if config.enable_fuzzy:
-            from identity_matching_spark.operators.compare import enrich_phonetic
-
-            records = enrich_phonetic(records)
-        return records
-
-    stage("records", build_records)
+    if resume and store.has("records"):
+        out["records"] = store.read("records")
+    else:
+        with _gated_records(files, config, config.enable_fuzzy) as gated:
+            stage("records", lambda: _with_phonetic(gated, config))
     blocking_holder: dict[str, BlockingResult] = {}
 
     def build_pairs():

@@ -13,6 +13,32 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Largest default driver heap; the engine's sf0.1 runs were sized for it.
+DRIVER_MEMORY_CAP_MB = 24 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else half
+    the host's RAM, at most 24g.
+
+    In local mode the driver JVM is the whole engine, and its heap comes on
+    top of the Python workers and the off-heap shuffle buffers, so a heap
+    sized past about half of RAM gets the JVM OOM-killed before it ever
+    runs out of heap. Where ``meminfo`` cannot be read (no procfs), the cap
+    is the default.
+    """
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{DRIVER_MEMORY_CAP_MB}m"
+    return f"{min(DRIVER_MEMORY_CAP_MB, total_kb // 2048)}m"
+
 
 def build_session(
     app_name: str = "identity_matching_spark",
@@ -65,7 +91,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -11,6 +11,7 @@ append-only lineage log — behind one class; an Iceberg deployment swaps
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -69,28 +70,37 @@ class SnapshotStore:
 
     def partition_metrics(self, name: str) -> list[dict]:
         """Per-partition metrics for a written stage (north_rule: resumable
-        with per-partition lineage + metrics): one entry per parquet
-        part-file with its row count (footer-driven scan grouped by
-        ``input_file_name``) and on-disk bytes. O(n_partitions) driver
-        rows — never row data."""
-        from pyspark.sql import functions as F
+        with per-partition lineage + metrics): one entry per non-empty
+        part-file with its row count and on-disk bytes. O(n_partitions)
+        driver rows — never row data. Parquet mode reads the row counts
+        from the part-files' footers on the driver, with no Spark job;
+        Iceberg mode counts a scan grouped by ``input_file_name``."""
+        if self.table_format == "iceberg":
+            from pyspark.sql import functions as F
 
-        per = (
-            self.read(name)
-            .groupBy(F.input_file_name().alias("file"))
-            .count()
-            .collect()
-        )
-        out = []
-        for r in per:
-            path = r["file"].replace("file://", "").split("?")[0]
-            out.append(
-                {
-                    "file": os.path.basename(path),
-                    "rows": r["count"],
-                    "bytes": os.path.getsize(path) if os.path.exists(path) else None,
-                }
+            per = (
+                self.read(name)
+                .groupBy(F.input_file_name().alias("file"))
+                .count()
+                .collect()
             )
+            counts = [
+                (r["file"].replace("file://", "").split("?")[0], r["count"]) for r in per
+            ]
+        else:
+            import pyarrow.parquet as pq
+
+            paths = glob.glob(os.path.join(self._path(name), "*.parquet"))
+            counts = [(path, pq.read_metadata(path).num_rows) for path in paths]
+        out = [
+            {
+                "file": os.path.basename(path),
+                "rows": rows,
+                "bytes": os.path.getsize(path) if os.path.exists(path) else None,
+            }
+            for path, rows in counts
+            if rows  # as in Iceberg mode: a scan sees no empty part-file
+        ]
         return sorted(out, key=lambda d: d["file"])
 
     # --- Iceberg snapshot surface (executes only with the runtime jar) ---

@@ -61,12 +61,15 @@ def test_checkpoint_resume_identical_clusters(spark, tmp_path):
     stages = {r["stage"] for r in rows}
     assert {"records", "pairs", "scored_pairs", "edges", "clusters"} <= stages
     # per-partition lineage (north_rule): every logged stage carries
-    # per-partition {file, rows, bytes} whose rows sum to rows_out
+    # per-partition {file, rows, bytes} whose rows sum to rows_out, and
+    # rows_out is the stage's row count in the data itself
+    store = SnapshotStore(spark, d)
     for r in rows:
         parts = r["partitions"]
         assert parts and len(parts) == r["n_partitions"]
         assert sum(p["rows"] for p in parts) == r["rows_out"]
         assert all(p["bytes"] > 0 and p["file"] for p in parts)
+        assert r["rows_out"] == store.count(r["stage"]), r["stage"]
 
 
 def test_snapshot_store_roundtrip(spark, tmp_path):
